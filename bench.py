@@ -22,7 +22,7 @@ import sys
 import time
 
 from sentiflow_spark.queries.registry import load_all
-from sentiflow_spark.session import get_spark
+from sentiflow_spark.session import cpus, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -151,7 +151,7 @@ def main() -> None:
     # stdout tail capture — the final line must stay well under that
     # (tools/verify.py asserts < 1500 bytes).
     detail_obj = {"init_s": init_s, "sf": sf_val, "host": {**host, **in_run},
-                  "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+                  "cpus": cpus(),
                   "pass1_queries": cold,
                   "pass2_queries": warm, "queries": timings, "value": total}
     repo_dir = os.path.dirname(os.path.abspath(__file__))

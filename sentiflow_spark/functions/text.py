@@ -5,17 +5,53 @@ language identification, document fingerprinting.
 All pure Column expressions — JVM-side, codegen'd, no Python in the hot
 path — with DuckDB-fragment twins for the oracle. At 100 TB these run
 as a single scan projection: no shuffle, no UDF serialization.
+
+Tokenizers are defined once, here. Each is a private ``_Tokenizer``
+(regex, lowercase-or-not) pair that renders both its Spark Column
+(``word_tokens``) and its DuckDB twin (``duck_word_tokens``), so a
+query and its oracle cannot drift apart on how text splits. Query
+modules call these helpers and never restate a tokenizer regex
+(tests/test_plans.py lints for it).
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Whitespace tokens (reference-free); BPE-ish lexical tokens: word /
-# number / single punctuation — a deterministic proxy for subword count.
-WORD_RE = "[a-zA-Z]+"
-BPE_RE = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
+
+class _Tokenizer(NamedTuple):
+    regex: str
+    lower: bool
+
+    def col(self, text: Column) -> Column:
+        return F.regexp_extract_all(
+            F.lower(text) if self.lower else text, F.lit(self.regex), 0
+        )
+
+    def sql(self, t: str) -> str:
+        # The twin follows Spark where the engines differ (U+0001 to
+        # U+2FFFF checked): Spark's lower() maps İ to i + U+0307 where
+        # DuckDB's drops the dot, and Java's \s has \v where RE2's does not.
+        src = f"lower(replace({t}, '\u0130', 'i\u0307'))" if self.lower else t
+        regex = self.regex.replace("\\s", "\\s\\v").replace("\\S", "[^\\s\\v]")
+        return f"regexp_extract_all({src}, '{regex}')"
+
+
+# Word tokens are ASCII letter runs, lowercased (the shingle/term
+# alphabet) or with case kept; BPE-ish tokens are word / number / single
+# punctuation, a deterministic proxy for subword count.
+_WORDS = _Tokenizer("[a-zA-Z]+", lower=True)
+_CASED_WORDS = _WORDS._replace(lower=False)
+_BPE = _Tokenizer("[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]", lower=False)
+_WS = _Tokenizer("\\S+", lower=False)
+_PUNCT = _Tokenizer("[^a-zA-Z0-9\\s]", lower=False)
+
+word_tokens, duck_word_tokens = _WORDS.col, _WORDS.sql
+cased_word_tokens, duck_cased_word_tokens = _CASED_WORDS.col, _CASED_WORDS.sql
+ws_tokens, duck_ws_tokens = _WS.col, _WS.sql
 
 # Tiny per-language stopword marker sets for the n-gram/stopword-hit
 # language heuristic. Deliberately small + disjoint so the heuristic is
@@ -30,17 +66,20 @@ LANG_MARKERS: dict[str, list[str]] = {
 STOPWORDS_EN = ["the", "a", "of", "to", "and", "in", "is", "it", "for", "on"]
 
 
-def ws_tokens(text: Column) -> Column:
-    """Whitespace tokenization, empty strings dropped."""
-    return F.filter(F.split(text, "\\s+"), lambda t: t != "")
+def word_count(text: Column) -> Column:
+    return F.size(cased_word_tokens(text))
+
+
+def duck_word_count(t: str) -> str:
+    return f"len({duck_cased_word_tokens(t)})"
 
 
 def token_count(text: Column) -> Column:
-    return F.size(F.regexp_extract_all(text, F.lit(BPE_RE), 0))
+    return F.size(_BPE.col(text))
 
 
-def word_count(text: Column) -> Column:
-    return F.size(F.regexp_extract_all(text, F.lit(WORD_RE), 0))
+def duck_token_count(t: str) -> str:
+    return f"len({_BPE.sql(t)})"
 
 
 def _count_hits(text: Column, words: list[str]) -> Column:
@@ -88,7 +127,7 @@ def quality_components(text: Column) -> dict[str, Column]:
     return {
         "n_chars": F.length(text),
         "n_words": word_count(text),
-        "n_punct": F.size(F.regexp_extract_all(text, F.lit("[^a-zA-Z0-9\\s]"), 0)),
+        "n_punct": F.size(_PUNCT.col(text)),
         "n_stop": _count_hits(text, STOPWORDS_EN),
     }
 
@@ -117,19 +156,14 @@ def quality_score(text: Column) -> Column:
 
 
 def duck_quality_score(t: str) -> str:
-    n_words = f"len(regexp_extract_all({t}, '{WORD_RE}'))"
-    n_punct = f"len(regexp_extract_all({t}, '[^a-zA-Z0-9\\s]'))"
+    n_words = duck_word_count(t)
+    n_punct = f"len({_PUNCT.sql(t)})"
     stop_pat = r"\b(" + "|".join(STOPWORDS_EN) + r")\b"
     n_stop = f"len(regexp_extract_all(lower({t}), '{stop_pat}'))"
     len_score = f"CAST(least(length({t}), 500) AS DOUBLE) / 500.0"
     word_ratio = f"CAST({n_words} AS DOUBLE) / greatest({n_words} + {n_punct}, 1)"
     stop_ratio = f"least(CAST({n_stop} AS DOUBLE) / greatest({n_words}, 1), 0.5) * 2.0"
     return f"(({len_score}) + ({word_ratio}) + ({stop_ratio})) / 3.0"
-
-
-def word_tokens(text: Column) -> Column:
-    """Lowercased word-token array (the shingle alphabet)."""
-    return F.regexp_extract_all(F.lower(text), F.lit(WORD_RE), 0)
 
 
 def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
@@ -160,7 +194,7 @@ def shingles(text: Column, n: int = 3) -> Column:
 
 
 def duck_shingles(t: str, n: int = 3) -> str:
-    toks = f"regexp_extract_all(lower({t}), '{WORD_RE}')"
+    toks = duck_word_tokens(t)
     parts = " || ' ' || ".join(f"__t[i+{k}]" if k else "__t[i]" for k in range(n))
     return (
         f"list_distinct(list_transform(generate_series(1, greatest(len({toks})-{n - 1}, 0)), "

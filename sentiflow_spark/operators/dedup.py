@@ -349,15 +349,9 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     probe). 4x15-bit chunks give 32,768 buckets per chunk, which keeps
     bucket occupancy — and the join output — proportional to true
     near-duplicate density."""
-    from sentiflow_spark.functions.text import WORD_RE
-
     toks = df.select(
         F.col(id_col),
-        F.explode(
-            F.array_distinct(
-                F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(WORD_RE), 0)
-            )
-        ).alias("token"),
+        F.explode(F.array_distinct(word_tokens(F.col(text_col)))).alias("token"),
     )
     return simhash_from_tokens(toks, id_col=id_col)
 

@@ -11,7 +11,9 @@ expressed declaratively it is one DataFrame plan:
 Catalyst sees the whole DAG: the router becomes two pushed-down scan
 predicates, both model joins broadcast the (micro-batch-sized) model
 output, and everything else stays in one WholeStageCodegen stage.
-The streaming deployment reuses exactly these transforms (streaming/dag.py).
+The streaming deployment (streaming/dag.py) reuses the router, the F2
+filter, the P4 rebuild and the shaping, but runs the model stubs on-row
+instead of joining their output back, so it applies F5 on-row too.
 """
 
 from __future__ import annotations

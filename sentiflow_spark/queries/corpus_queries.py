@@ -30,7 +30,7 @@
 
 Reference parity: the reference has no corpus engine; these extend the
 M5 training-data families (SURVEY §7.2) on the same tokenizer
-(`functions/text.py` WORD_RE), the same MinHash-LSH cluster graph
+(`functions/text.py` word_tokens), the same MinHash-LSH cluster graph
 (`operators/dedup.py`), and the same quantized-vector cosine
 (`functions/vectors.py`) as the first-wave queries.
 
@@ -75,7 +75,14 @@ from pyspark.sql import functions as F
 
 from sentiflow_spark.functions.hashing import duck_md5_i32
 from sentiflow_spark.functions.numeric import MONEY
-from sentiflow_spark.functions.text import WORD_RE, duck_fingerprint
+from sentiflow_spark.functions.text import (
+    cased_word_tokens,
+    duck_cased_word_tokens,
+    duck_fingerprint,
+    duck_word_count,
+    duck_word_tokens,
+    word_tokens,
+)
 from sentiflow_spark.functions.vectors import (
     adaptive_plane_count,
     duck_cosine,
@@ -488,7 +495,7 @@ def ret_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (
       SELECT doc_id, generate_subscripts(w, 1) - 1 AS pos, unnest(w) AS term
-      FROM (SELECT doc_id, regexp_extract_all(lower(text), '{WORD_RE}') AS w
+      FROM (SELECT doc_id, {duck_word_tokens("text")} AS w
             FROM documents)
     )
     SELECT a.doc_id, COUNT(*) AS n_phrase, CAST(MIN(a.pos) AS INTEGER) AS first_pos
@@ -508,9 +515,7 @@ def ret_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(WORD_RE), F.lit(0))
-        ).alias("pos", "term"),
+        F.posexplode(word_tokens(F.col("text"))).alias("pos", "term"),
     ).filter(F.col("term").isin(*PHRASE))
     a = toks.filter(F.col("term") == PHRASE[0]).select("doc_id", "pos")
     b = toks.filter(F.col("term") == PHRASE[1]).select(
@@ -2813,8 +2818,8 @@ _FUNNEL_LANGS_SQL = ", ".join(f"'{code}'" for code in FUNNEL_LANGS)
       SELECT
         n_chars BETWEEN {FUNNEL_LEN_LO} AND {FUNNEL_LEN_HI} AS g1,
         lang IN ({_FUNNEL_LANGS_SQL}) AS g2,
-        len(list_distinct(regexp_extract_all(text, '{WORD_RE}'))) * 2
-          >= len(regexp_extract_all(text, '{WORD_RE}')) AS g3,
+        len(list_distinct({duck_cased_word_tokens("text")})) * 2
+          >= {duck_word_count("text")} AS g3,
         NOT ({" OR ".join(f"contains(text, '{p}')" for p in BLOCKLIST)}) AS g4
       FROM documents
     ),
@@ -2846,7 +2851,7 @@ _FUNNEL_LANGS_SQL = ", ".join(f"'{code}'" for code in FUNNEL_LANGS)
 )
 def txt_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    words = F.regexp_extract_all(F.col("text"), F.lit(WORD_RE), 0)
+    words = cased_word_tokens(F.col("text"))
     g1 = F.col("n_chars").between(FUNNEL_LEN_LO, FUNNEL_LEN_HI)
     g2 = F.col("lang").isin(*FUNNEL_LANGS)
     g3 = F.size(F.array_distinct(words)) * 2 >= F.size(words)

@@ -46,7 +46,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from sentiflow_spark.functions.hashing import md5_i32
-from sentiflow_spark.functions.text import BPE_RE, duck_fingerprint, token_count
+from sentiflow_spark.functions.text import duck_fingerprint, duck_token_count, token_count
 from sentiflow_spark.operators.dedup import (
     BP_MAX_REMOVED_FRAC,
     BP_MIN_DOCS,
@@ -466,7 +466,7 @@ def _duck_dag_oracle(source: str = "documents") -> str:
     ),
     tok AS MATERIALIZED (
       SELECT doc_id, clean_text, cut_chars,
-             CAST(len(regexp_extract_all(clean_text, '{BPE_RE}')) AS BIGINT)
+             CAST({duck_token_count("clean_text")} AS BIGINT)
                AS n_tokens
       FROM cut
     ),

@@ -23,10 +23,14 @@ from sentiflow_spark.functions.hashing import (
     md5_i60,
 )
 from sentiflow_spark.functions.text import (
-    WORD_RE,
     duck_shingles,
+    duck_token_count,
+    duck_word_tokens,
+    duck_ws_tokens,
     shingles_from_tokens,
+    token_count,
     word_tokens,
+    ws_tokens,
 )
 from sentiflow_spark.queries.registry import register
 from sentiflow_spark.tables import load
@@ -99,7 +103,7 @@ def txt_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "txt_repetition_filter",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '{WORD_RE}')) AS tok
+      SELECT doc_id, unnest({duck_word_tokens("text")}) AS tok
       FROM documents
     ),
     c AS (SELECT doc_id, tok, COUNT(*) AS n FROM toks GROUP BY 1, 2),
@@ -436,7 +440,7 @@ DSIR_BUCKETS = 1024  # hashed n-gram feature space (paper uses 10k)
     "txt_dsir_weights",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, lang, regexp_extract_all(lower(text), '{WORD_RE}') AS t
+      SELECT doc_id, lang, {duck_word_tokens("text")} AS t
       FROM documents
     ),
     feats AS (
@@ -586,8 +590,8 @@ def duck_gopher_m_cte(source: str = "documents", prefix: str = "") -> str:
     p = prefix
     return f"""{p}gbase AS (
       SELECT doc_id,
-             regexp_extract_all(text, '\\S+') AS toks,
-             regexp_extract_all(lower(text), '{WORD_RE}') AS words,
+             {duck_ws_tokens("text")} AS toks,
+             {duck_word_tokens("text")} AS words,
              CAST(length(text) - length(replace(text, '#', '')) AS BIGINT)
                + CAST((length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT)
                AS n_symbols
@@ -614,12 +618,8 @@ def gopher_flags(docs: DataFrame) -> DataFrame:
     txt_gopher_rules and txt_curation_dag."""
     base = docs.select(
         "doc_id",
-        F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), F.lit(0)).alias(
-            "toks"
-        ),
-        F.regexp_extract_all(
-            F.lower(F.col("text")), F.lit(WORD_RE), F.lit(0)
-        ).alias("words"),
+        ws_tokens(F.col("text")).alias("toks"),
+        word_tokens(F.col("text")).alias("words"),
         (
             (F.length("text") - F.length(F.replace(F.col("text"), F.lit("#"))))
             .cast("long")
@@ -719,7 +719,7 @@ BPE_PAIR_TOPK = 25
     "txt_bpe_pairs",
     oracle=f"""
     WITH words AS (
-      SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
+      SELECT unnest({duck_word_tokens("text")}) AS w
       FROM documents
     ),
     wf AS (SELECT w, COUNT(*) AS f FROM words GROUP BY w),
@@ -750,11 +750,7 @@ BPE_PAIR_TOPK = 25
 )
 def txt_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    words = docs.select(
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
-        ).alias("w")
-    )
+    words = docs.select(F.explode(word_tokens(F.col("text"))).alias("w"))
     wf = words.groupBy("w").agg(F.count(F.lit(1)).alias("f"))
     # chars + end-of-word marker; pairs = zip of the symbol array with
     # its own tail (same no-self-join idiom as txt_ngram_counts)
@@ -789,8 +785,7 @@ MIX_MAX_EPOCHS_PM = 4000  # repeat cap, permille (4 epochs)
     oracle=f"""
     WITH tok AS (
       SELECT source,
-             len(regexp_extract_all(text,
-                 '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]')) AS nt
+             {duck_token_count("text")} AS nt
       FROM documents
     ),
     per AS (SELECT source, CAST(SUM(nt) AS BIGINT) AS tokens
@@ -819,8 +814,6 @@ MIX_MAX_EPOCHS_PM = 4000  # repeat cap, permille (4 epochs)
     "(cross-multiplied, no doubles), bit-identical across engines.",
 )
 def txt_mix_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sentiflow_spark.functions.text import token_count
-
     docs = load(spark, sf_dir, "documents")
     per = (
         docs.select("source", token_count(F.col("text")).alias("nt"))
@@ -941,8 +934,8 @@ def _bpe_oracle() -> str:
     CTE block, then the per-doc encode join. Built by a loop at import
     time; the registered oracle is still a static string."""
     parts = [
-        "WITH words0 AS (SELECT unnest(regexp_extract_all(lower(text),"
-        " '[a-z]+')) AS w FROM documents),",
+        f"WITH words0 AS (SELECT unnest({duck_word_tokens('text')}) AS w"
+        " FROM documents),",
         "wf AS (SELECT w, COUNT(*) AS f FROM words0 GROUP BY w),",
         "seg0 AS (SELECT w, f, '⟨' || array_to_string(list_append("
         "regexp_extract_all(w, '.'), '</w>'), '⟩⟨') ||"
@@ -967,8 +960,8 @@ def _bpe_oracle() -> str:
         f"wtok AS (SELECT w, len(regexp_extract_all(s,"
         f" '⟨([^⟩]*)⟩', 1)) AS nt"
         f" FROM seg{BPE_ENC_MERGES}),",
-        "dw AS (SELECT doc_id, unnest(regexp_extract_all(lower(text),"
-        " '[a-z]+')) AS w FROM documents),",
+        f"dw AS (SELECT doc_id, unnest({duck_word_tokens('text')}) AS w"
+        " FROM documents),",
         "agg AS (SELECT doc_id, CAST(SUM(nt) AS BIGINT) AS n FROM dw"
         " JOIN wtok USING (w) GROUP BY doc_id)",
         "SELECT d.doc_id, COALESCE(agg.n, 0) AS n_bpe_tokens"
@@ -998,11 +991,7 @@ def _bpe_oracle() -> str:
 )
 def txt_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    words = docs.select(
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
-        ).alias("w")
-    )
+    words = docs.select(F.explode(word_tokens(F.col("text"))).alias("w"))
     wf = words.groupBy("w").agg(F.count(F.lit(1)).alias("f"))
     sym_arr = F.concat(F.split(F.col("w"), ""), F.array(F.lit("</w>")))
     seg0 = F.concat(
@@ -1046,12 +1035,7 @@ def txt_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).localCheckpoint(eager=False)
     wtok = cur.select("w", F.size(blocks).alias("nt"))
-    dw = docs.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
-        ).alias("w"),
-    )
+    dw = docs.select("doc_id", F.explode(word_tokens(F.col("text"))).alias("w"))
     agg = (
         dw.join(F.broadcast(wtok), "w")
         .groupBy("doc_id")
@@ -1073,7 +1057,7 @@ def _duck_wordpiece_oracle() -> str:
     l, mc = WP_MAX_PIECE, WP_MIN_COUNT
     return f"""
     WITH RECURSIVE words0 AS (
-      SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
+      SELECT unnest({duck_word_tokens("text")}) AS w
       FROM documents
     ),
     wf AS MATERIALIZED (
@@ -1120,7 +1104,7 @@ def _duck_wordpiece_oracle() -> str:
       SELECT w, CAST(MAX(cnt) AS BIGINT) AS nt FROM walk GROUP BY w
     ),
     dw AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
+      SELECT doc_id, unnest({duck_word_tokens("text")}) AS w
       FROM documents
     ),
     agg AS (
@@ -1157,11 +1141,7 @@ def _duck_wordpiece_oracle() -> str:
 )
 def txt_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    words = docs.select(
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
-        ).alias("w")
-    )
+    words = docs.select(F.explode(word_tokens(F.col("text"))).alias("w"))
     wf = words.groupBy("w").agg(F.count(F.lit(1)).alias("f"))
     pos_l = (
         wf.select(
@@ -1224,12 +1204,7 @@ def txt_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(acc),
     )
     wtok = mla.select("w", walk.getField("cnt").alias("nt"))
-    dw = docs.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
-        ).alias("w"),
-    )
+    dw = docs.select("doc_id", F.explode(word_tokens(F.col("text"))).alias("w"))
     agg = (
         dw.join(F.broadcast(wtok), "w")
         .groupBy("doc_id")
@@ -1269,7 +1244,7 @@ def _duck_unigram_oracle() -> str:
     )
     return f"""
     WITH RECURSIVE words0 AS (
-      SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
+      SELECT unnest({duck_word_tokens("text")}) AS w
       FROM documents
     ),
     wf AS MATERIALIZED (
@@ -1327,7 +1302,7 @@ def _duck_unigram_oracle() -> str:
       WHERE k.k = length(k.w)
     ),
     dw AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
+      SELECT doc_id, unnest({duck_word_tokens("text")}) AS w
       FROM documents
     ),
     agg AS (
@@ -1374,11 +1349,7 @@ def _duck_unigram_oracle() -> str:
 )
 def txt_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    words = docs.select(
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
-        ).alias("w")
-    )
+    words = docs.select(F.explode(word_tokens(F.col("text"))).alias("w"))
     wf = words.groupBy("w").agg(F.count(F.lit(1)).alias("f"))
     pos_l = (
         wf.select(
@@ -1485,12 +1456,7 @@ def txt_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
         (combined / S).cast("long").alias("wcost"),
         (combined % S).cast("long").alias("wnt"),
     )
-    dw = docs.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
-        ).alias("w"),
-    )
+    dw = docs.select("doc_id", F.explode(word_tokens(F.col("text"))).alias("w"))
     agg = (
         dw.join(F.broadcast(wtok), "w")
         .groupBy("doc_id")
@@ -1517,7 +1483,7 @@ _PPL_REF_SQL = ", ".join(f"'{s}'" for s in PPL_REF_SOURCES)
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, source,
-             regexp_extract_all(lower(text), '[a-zA-Z]+') AS t
+             {duck_word_tokens("text")} AS t
       FROM documents
     ),
     bigr AS (
@@ -1585,8 +1551,6 @@ _PPL_REF_SQL = ", ".join(f"'{s}'" for s in PPL_REF_SOURCES)
     "is bit-identical in both engines (rel_percentile precedent).",
 )
 def txt_perplexity_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sentiflow_spark.functions.text import word_tokens
-
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", "source", word_tokens(F.col("text")).alias("t")

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from sentiflow_spark.functions.hashing import MERSENNE_31, minhash_coeffs
+from sentiflow_spark.functions.text import duck_word_tokens
 from sentiflow_spark.operators.dedup import (
     NUM_PERM,
     BAND_SIZE,
@@ -55,7 +56,7 @@ def _duck_shingles_cte(
 )"""
     return f"""
 {prefix}toks AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-zA-Z]+') AS t FROM {source}
+  SELECT doc_id, {duck_word_tokens("text")} AS t FROM {source}
 ),
 {prefix}sh AS (
   SELECT doc_id,
@@ -112,10 +113,10 @@ _DUCK_BAND_PAIRS = """
 
 
 _DUCK_SIMHASH_CTE = (
-    """
+    f"""
 toksd AS (
   SELECT DISTINCT doc_id,
-         unnest(list_distinct(regexp_extract_all(lower(text), '[a-zA-Z]+'))) AS token
+         unnest(list_distinct({duck_word_tokens("text")})) AS token
   FROM documents
 ),
 th AS (

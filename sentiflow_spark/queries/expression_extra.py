@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sentiflow_spark.functions.text import WORD_RE
+from sentiflow_spark.functions.text import duck_word_tokens, word_tokens
 from sentiflow_spark.queries.registry import register
 from sentiflow_spark.tables import load
 
@@ -222,7 +222,7 @@ def rel_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     "txt_higher_order",
     oracle=f"""
     WITH w AS (
-      SELECT doc_id, regexp_extract_all(lower(text), '{WORD_RE}') AS words
+      SELECT doc_id, {duck_word_tokens("text")} AS words
       FROM documents)
     SELECT doc_id,
            array_to_string(
@@ -250,10 +250,7 @@ def txt_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     # Materialize the regex extraction once (CollapseProject duplicates
     # inlined expressions per reference — see shingles_from_tokens).
-    toks = docs.select(
-        "doc_id",
-        F.regexp_extract_all(F.lower("text"), F.lit(WORD_RE), F.lit(0)).alias("words"),
-    )
+    toks = docs.select("doc_id", word_tokens(F.col("text")).alias("words"))
     w = F.col("words")
     head3 = F.slice(w, 1, 3)
     return toks.select(

@@ -6,7 +6,7 @@ the primitive behind quality-weighted sampling and dedup-aware search).
 Reference parity: the reference has no retrieval engine; these are
 declared extensions of the text-analysis family (SURVEY §7.2 M5),
 built on the same tokenizer as ``txt_token_stats``
-(`functions/text.py` WORD_RE).
+(`functions/text.py` word_tokens).
 
 Cross-engine determinism: Spark's ``ln`` and DuckDB's ``ln`` differ by
 1 ulp on ~6% of inputs (measured), so every score is quantized with
@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from sentiflow_spark.functions.text import WORD_RE
+from sentiflow_spark.functions.text import duck_word_tokens, word_tokens
 from sentiflow_spark.queries.registry import register
 from sentiflow_spark.tables import load
 
@@ -52,18 +52,13 @@ B = 0.75
 
 _DUCK_TOKS = f"""
 toks AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '{WORD_RE}')) AS term
+  SELECT doc_id, unnest({duck_word_tokens("text")}) AS term
   FROM documents
 )"""
 
 
 def _tokens(docs: DataFrame) -> DataFrame:
-    return docs.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(WORD_RE), F.lit(0))
-        ).alias("term"),
-    )
+    return docs.select("doc_id", F.explode(word_tokens(F.col("text"))).alias("term"))
 
 
 @register(

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sentiflow_spark.operators.projections import to_raw_content
+from sentiflow_spark.pipeline.batch import documents_as_raw_content
 from sentiflow_spark.pipeline.stubs import DUCK_LABEL, DUCK_SCORE
 from sentiflow_spark.queries.registry import register
 from sentiflow_spark.streaming.dag import (
@@ -60,14 +60,7 @@ _DUCK_RAW = (
     "(file source, availableNow) — streaming results hash-match batch SQL.",
 )
 def st_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_stream(spark, sf_dir, "documents")
-    raw = to_raw_content(
-        docs,
-        topic=F.col("lang"),
-        source=F.col("source"),
-        post_id=F.col("doc_id"),
-        text=F.col("text"),
-    )
+    raw = documents_as_raw_content(load_stream(spark, sf_dir, "documents"))
     return run_to_table(streaming_sentiment_flow(raw, router_threshold=ROUTER_T))
 
 

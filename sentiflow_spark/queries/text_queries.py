@@ -7,15 +7,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sentiflow_spark.functions.text import (
-    BPE_RE,
-    WORD_RE,
     duck_fingerprint,
     duck_lang_id,
     duck_quality_score,
+    duck_token_count,
+    duck_word_count,
+    duck_word_tokens,
     fingerprint,
     lang_id,
     token_count,
     word_count,
+    word_tokens,
 )
 from sentiflow_spark.queries.registry import register
 from sentiflow_spark.tables import load
@@ -27,9 +29,9 @@ from sentiflow_spark.tables import load
     SELECT doc_id,
            length(text) AS n_chars_obs,
            strlen(text) AS n_bytes,
-           len(regexp_extract_all(text, '{WORD_RE}')) AS n_words,
-           len(regexp_extract_all(text, '{BPE_RE}')) AS n_tokens,
-           len(list_distinct(regexp_extract_all(lower(text), '{WORD_RE}'))) AS n_unique_words
+           {duck_word_count("text")} AS n_words,
+           {duck_token_count("text")} AS n_tokens,
+           len(list_distinct({duck_word_tokens("text")})) AS n_unique_words
     FROM documents
     """,
     tags=("text", "M5", "bench"),
@@ -45,7 +47,7 @@ def txt_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         word_count(t).alias("n_words"),
         token_count(t).alias("n_tokens"),
         F.size(
-            F.array_distinct(F.regexp_extract_all(F.lower(t), F.lit(WORD_RE), 0))
+            F.array_distinct(word_tokens(t))
         ).alias("n_unique_words"),
     )
 
@@ -371,9 +373,9 @@ def txt_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "txt_ngram_counts",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, regexp_extract_all(lower(text), '[a-zA-Z]+') AS t
+      SELECT doc_id, {duck_word_tokens("text")} AS t
       FROM documents
     ),
     grams AS (
@@ -396,8 +398,6 @@ def txt_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "aggregate map-side, and the top-k is TakeOrderedAndProject.",
 )
 def txt_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sentiflow_spark.functions.text import word_tokens
-
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(word_tokens(F.col("text")).alias("t"))
     bigrams = toks.select(
@@ -425,7 +425,7 @@ VOCAB_MIN_COUNT = 5
     "txt_pack_sequences",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, lang, len(regexp_extract_all(text, '{BPE_RE}')) AS n_tokens
+      SELECT doc_id, lang, {duck_token_count("text")} AS n_tokens
       FROM documents
     ),
     c AS (
@@ -474,7 +474,7 @@ def txt_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     "txt_vocab_build",
     oracle=f"""
     WITH toks AS (
-      SELECT unnest(regexp_extract_all(lower(text), '{WORD_RE}')) AS term
+      SELECT unnest({duck_word_tokens("text")}) AS term
       FROM documents
     ),
     cnt AS (
@@ -495,11 +495,7 @@ def txt_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(WORD_RE), F.lit(0))
-        ).alias("term")
-    )
+    toks = docs.select(F.explode(word_tokens(F.col("text"))).alias("term"))
     cnt = (
         toks.groupBy("term")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -517,7 +513,7 @@ def txt_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH s1 AS (
       SELECT doc_id, lang,
              {{FP}} AS fp,
-             len(regexp_extract_all(text, '{BPE_RE}')) AS n_tokens,
+             {duck_token_count("text")} AS n_tokens,
              {{QUALITY}} AS quality
       FROM documents
     ),
@@ -616,7 +612,7 @@ def txt_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     "txt_unigram_logprob",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '{WORD_RE}')) AS term
+      SELECT doc_id, unnest({duck_word_tokens("text")}) AS term
       FROM documents
     ),
     uni AS (SELECT term, COUNT(*) AS cnt FROM toks GROUP BY 1),
@@ -651,12 +647,7 @@ def txt_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def txt_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(WORD_RE), F.lit(0))
-        ).alias("term"),
-    )
+    toks = docs.select("doc_id", F.explode(word_tokens(F.col("text"))).alias("term"))
     uni = toks.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
     tot = uni.agg(F.sum("cnt").cast("double").alias("total"))
     scored = (
@@ -741,8 +732,8 @@ PMI_MIN_PAIR = 5
     "txt_cooccur_pmi",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '{WORD_RE}')) AS term,
-             generate_subscripts(regexp_extract_all(lower(text), '{WORD_RE}'), 1) AS pos
+      SELECT doc_id, unnest({duck_word_tokens("text")}) AS term,
+             generate_subscripts({duck_word_tokens("text")}, 1) AS pos
       FROM documents
     ),
     uni AS (SELECT term, COUNT(*) AS cnt FROM toks GROUP BY 1),
@@ -778,9 +769,7 @@ def txt_cooccur_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(WORD_RE), F.lit(0))
-        ).alias("pos0", "term"),
+        F.posexplode(word_tokens(F.col("text"))).alias("pos0", "term"),
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "term")
     # pinned: the positional postings have 2 + PMI_MAX_DIST consumers
     # (unigram counts, each shifted union leg, the join's right side),

@@ -28,9 +28,14 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sentiflow_spark.operators.filters import route_by_length
-from sentiflow_spark.operators.projections import shape_result, to_sentiment_input
+from sentiflow_spark.operators.filters import route_by_length, useful_summary
+from sentiflow_spark.operators.projections import (
+    rebuild_summarized_input,
+    shape_result,
+    to_sentiment_input,
+)
 from sentiflow_spark.pipeline.stubs import (
+    SCORE_MISSING_MOD,
     stub_label_col,
     stub_score_col,
     stub_summary_col,
@@ -147,17 +152,13 @@ def streaming_sentiment_flow(raw: DataFrame, router_threshold: int = 1024) -> Da
     store, checkpoint only tracks offsets."""
     sa = to_sentiment_input(raw)
     long_b, short_b = route_by_length(sa, threshold=router_threshold)
-    summarized = (
-        long_b.withColumn("summary", stub_summary_col(F.col("text")))
-        .filter((F.col("summary") != "") & (F.col("summary") != F.col("text")))
-        .withColumn("original_text", F.col("text"))
-        .withColumn("text", F.col("summary"))
-        .withColumn("was_summarized", F.lit(True))
-        .drop("summary")
+    summarized = rebuild_summarized_input(
+        useful_summary(long_b.withColumn("summary", stub_summary_col(F.col("text"))))
     )
     united = short_b.unionByName(summarized)
     score = stub_score_col(F.col("text"))
-    missing = F.length("text") % 47 == 0
+    # F5 on-row: the rows stub_sentiment drops get the zero-value score
+    missing = F.length("text") % SCORE_MISSING_MOD == 0
     scored = (
         united.withColumn(
             "sentiment_score", F.when(missing, F.lit(0.0)).otherwise(score)

@@ -343,9 +343,10 @@ def test_admit_batch_replay_with_own_crossing_converges(spark, tmp_path):
     cross BP_MIN_DOCS: the prior attempt's segdocs pairs (segdocs is
     bucket-partitioned, never generation-purged) would otherwise
     return the batch's own delta docs as stale, double them in aff_n,
-    and strip_with_boiler's collect_list reassembly would double their
-    text in the committed features. The anti-join of the delta's
-    doc_ids out of the stale set makes the replay exact."""
+    and strip_with_boiler would emit duplicate feature rows for them
+    within one generation, which publish's per-(doc, gen) latest-wins
+    cannot resolve. The anti-join of the delta's doc_ids out of the
+    stale set makes the replay exact."""
     from sentiflow_spark.queries.curation_delta import admit_batch
 
     docs, batches = _cross_in_batch1_docs(spark, tmp_path)

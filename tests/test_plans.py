@@ -749,6 +749,49 @@ def test_oracle_lambda_lint_catches_planted_offenders():
     assert clean == []
 
 
+# A tokenizer regex restated outside functions/text.py: the constants
+# that used to hold them, a quoted letter-run class (the word and BPE
+# tokenizers, in Spark or DuckDB spelling), or a non-whitespace run.
+_TOKENIZER_RESTATEMENT = r"""WORD_RE|BPE_RE|['"]\[a-z(?:A-Z)?\]\+|\\S\+"""
+
+
+def _tokenizer_restatements(src: str) -> list[int]:
+    import re
+
+    return [
+        i for i, line in enumerate(src.splitlines(), 1)
+        if re.search(_TOKENIZER_RESTATEMENT, line)
+    ]
+
+
+def test_tokenizers_defined_only_in_functions_text():
+    """Every tokenizer is defined once, with its DuckDB twin, in
+    functions/text.py; no other module under sentiflow_spark/ restates
+    a tokenizer regex, so a query cannot split text differently from
+    its oracle or from its sibling queries."""
+    import pathlib
+
+    import sentiflow_spark
+
+    pkg = pathlib.Path(sentiflow_spark.__file__).parent
+    found = [
+        f"{p.relative_to(pkg)}:{i}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != pkg / "functions" / "text.py"
+        for i in _tokenizer_restatements(p.read_text())
+    ]
+    assert not found, f"tokenizer regex restated at {found}: use functions/text.py"
+    for planted in (
+        "from sentiflow_spark.functions.text import WORD_RE",
+        "SELECT regexp_extract_all(lower(text), '[a-z]+')",
+        "F.regexp_extract_all(F.col('t'), F.lit(\"[a-zA-Z]+|[0-9]+\"), 0)",
+        "regexp_extract_all(text, '\\\\S+') AS toks",
+        'F.lit(r"\\S+")',
+    ):
+        assert _tokenizer_restatements(planted) == [1], planted
+    assert _tokenizer_restatements('_TRACKING_RE = "(utm_[a-z]+|fbclid)"') == []
+
+
 def test_no_duplicated_python_udf_evaluation(plan_scan):
     """No optimized plan may evaluate the same Python UDF in more than
     one ArrowEvalPython node: each extra node is a full extra Python

@@ -5,11 +5,13 @@ LSH bucketing never separates identical vectors."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from sentiflow_spark.functions.numeric import MONEY
+from sentiflow_spark.functions import text as T
 from sentiflow_spark.functions.text import quality_score
 from sentiflow_spark.functions.vectors import rp_bucket, rp_hyperplanes
 from sentiflow_spark.operators.skew import salted_aggregate
@@ -2145,3 +2147,42 @@ def test_exif_strip_skips_xmp_app1(spark):
         (F.hex(out) == F.col("hout")).alias("bytes_ok"),
     ).collect()
     assert all(r["had_ok"] and r["bytes_ok"] for r in got)
+
+
+# Mixed case, digits, punctuation runs, non-ASCII letters (é, ß), the
+# two code points whose lowercase or whitespace class differs between
+# the engines (İ, vertical tab), the Kelvin sign (lowercases to ASCII
+# k), tabs, newlines, empty and NULL.
+TOKENIZER_TEXTS = [
+    "Hello World, MiXeD cAsE",
+    "x9y 123abc4 3.14 007",
+    "punct!!! ...?? -- a,b;c (d)",
+    "café RÉSUMÉ école",
+    "straße MASSE ß",
+    "\u212a kelvin \u212aB",
+    "\u0130stanbul \u0130I",
+    "tab\tsep\t\tx",
+    "new\nline\r\nend\n",
+    "v\x0bt\x0c",
+    "",
+    None,
+]
+
+
+@pytest.mark.parametrize("tok", ["_WORDS", "_CASED_WORDS", "_BPE", "_WS", "_PUNCT"])
+def test_tokenizer_matches_duckdb_twin(spark, tok):
+    """Each tokenizer's Spark Column and its DuckDB fragment yield the
+    same token list (NULL for NULL) on adversarial text — the oracles
+    of every query built on it depend on this."""
+    import duckdb
+    import pandas as pd
+
+    tk = getattr(T, tok)
+    ids = list(range(len(TOKENIZER_TEXTS)))
+    df = spark.createDataFrame(list(zip(ids, TOKENIZER_TEXTS)), "i int, text string")
+    got = {r.i: r.t for r in df.select("i", tk.col(F.col("text")).alias("t")).collect()}
+    con = duckdb.connect()
+    con.register("docs", pd.DataFrame({"i": ids, "text": TOKENIZER_TEXTS}))
+    want = dict(con.execute(f"SELECT i, {tk.sql('text')} FROM docs").fetchall())
+    assert got == want
+    assert got[len(ids) - 1] is None and got[len(ids) - 2] == []
